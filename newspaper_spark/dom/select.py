@@ -6,11 +6,9 @@
 * ``find_attr_contains`` semantics — case-insensitive *substring* match
   on one attribute (the translate()+contains() xpath at
   parsers.py:121-122), folded into find_by_tag
-* ``find_attr_regex``    — case-insensitive regex search on one
-  attribute (the EXSLT re:test path, parsers.py:117-119)
 * ``css_select``    — the small CSS subset the reference passes to
-  cssselect: tag, [attr], [attr=v], [attr~=v], [attr*=v], descendant
-  combinator and comma groups.
+  cssselect: tag, [attr], [attr=v], [attr~=v], [attr*=v] and comma
+  groups of those simple selectors (no combinators).
 * ``iter_comments`` — '//comment()' (parsers.py:184-186)
 
 All results are in document order, matching xpath. Hot paths use
@@ -22,7 +20,7 @@ from __future__ import annotations
 import re
 import string
 
-from .element import Element, is_comment, is_element
+from .element import Element, is_comment
 
 _UPPER_TO_LOWER = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
 
@@ -133,29 +131,6 @@ def find_by_tags(root, tags) -> list:
     return results
 
 
-def find_attr_regex(root, attr: str, pattern: str) -> list:
-    rx = re.compile(pattern, re.IGNORECASE)
-    search = rx.search
-    results = []
-    stack = [root]
-    pop = stack.pop
-    push = stack.extend
-    while stack:
-        node = pop()
-        children = node._children
-        if children:
-            # NOTE: the [::-1] slice beats extend(reversed(...)) here —
-            # slice+extend is two C memcpys, the iterator pays per-item
-            # dispatch (measured on the 300-page kernel bench)
-            push(children[::-1])
-        if node.tag.__class__ is not str:
-            continue
-        av = node.attrib.get(attr)
-        if av is not None and search(av):
-            results.append(node)
-    return results
-
-
 def iter_comments(root) -> list:
     out = []
     stack = [root]
@@ -167,16 +142,6 @@ def iter_comments(root) -> list:
         if is_comment(node):
             out.append(node)
     return out
-
-
-def get_element_by_id(root, idd):
-    stack = [root]
-    while stack:
-        node = stack.pop()
-        if node.tag.__class__ is str and node.attrib.get("id") == idd:
-            return node
-        stack.extend(node._children[::-1])
-    return None
 
 
 # ---------------------------------------------------------------------------
@@ -240,14 +205,17 @@ def _parse_simple(token: str) -> _Simple:
     return _Simple(tag or None, conds)
 
 
-def _parse_selector(selector: str):
+def _parse_selector(selector: str) -> list:
+    """Comma group → list of simple selectors. Combinators are not
+    supported: raising beats silently matching the wrong nodes."""
     groups = []
     for part in selector.split(","):
         part = part.strip()
         if not part:
             continue
-        chain = [_parse_simple(tok) for tok in part.split()]
-        groups.append(chain)
+        if any(c in _SEL_ATTR_RE.sub("", part) for c in " \t\n>+~"):
+            raise ValueError(f"unsupported CSS combinator in {part!r}")
+        groups.append(_parse_simple(part))
     return groups
 
 
@@ -260,36 +228,14 @@ def css_select(root: Element, selector: str) -> list:
         groups = _parse_selector(selector)
         if len(_SELECTOR_CACHE) < 512:
             _SELECTOR_CACHE[selector] = groups
+    # the tag test is inlined ahead of the matches() call: selectors
+    # with a tag reject most nodes, and the attribute dispatch is only
+    # worth paying for candidates (matches() was ~240k calls/300 pages
+    # before this prefilter)
+    singles = [(s, s.tag if s.tag and s.tag != "*" else None, s.conds)
+               for s in groups]
     out = []
     stack = [root]
-    # fast path: every group is a single simple selector (the common
-    # case: "meta", "*[gravityScore]", "span[class~=dropcap]") — no
-    # ancestor walking needed. The tag test is inlined ahead of the
-    # matches() call: selectors with a tag reject most nodes, and the
-    # attribute dispatch is only worth paying for candidates (matches()
-    # was ~240k calls/300 pages before this prefilter).
-    if all(len(ch) == 1 for ch in groups):
-        singles = [(s, s.tag if s.tag and s.tag != "*" else None, s.conds)
-                   for s in (ch[0] for ch in groups)]
-        while stack:
-            node = stack.pop()
-            children = node._children
-            if children:
-                stack.extend(children[::-1])
-            t = node.tag
-            if t.__class__ is not str:
-                continue
-            for s, stag, sconds in singles:
-                if stag is not None and t != stag:
-                    continue
-                if not sconds or s.matches(node):
-                    out.append(node)
-                    break
-        return out
-    # chain path: same inline tag prefilter on each chain's LAST simple
-    # selector before the ancestor walk
-    chains = [(ch, ch[-1].tag if ch[-1].tag and ch[-1].tag != "*" else None)
-              for ch in groups]
     while stack:
         node = stack.pop()
         children = node._children
@@ -298,33 +244,10 @@ def css_select(root: Element, selector: str) -> list:
         t = node.tag
         if t.__class__ is not str:
             continue
-        for chain, ltag in chains:
-            if ltag is not None and t != ltag:
+        for s, stag, sconds in singles:
+            if stag is not None and t != stag:
                 continue
-            if _match_chain(node, chain, root):
+            if not sconds or s.matches(node):
                 out.append(node)
                 break
     return out
-
-
-def _match_chain(node: Element, chain, root: Element) -> bool:
-    if not chain[-1].matches(node):
-        return False
-    idx = len(chain) - 2
-    anc = node.getparent()
-    while idx >= 0:
-        found = False
-        while anc is not None:
-            stop_after = anc is root
-            if chain[idx].matches(anc):
-                found = True
-                anc = anc.getparent()
-                break
-            if stop_after:
-                anc = None
-                break
-            anc = anc.getparent()
-        if not found:
-            return False
-        idx -= 1
-    return True

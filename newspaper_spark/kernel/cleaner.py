@@ -12,14 +12,11 @@ import re
 
 from ..dom import (
     Element,
-    css_select,
     drop_tag,
-    find_attr_regex,
     find_by_tag,
     find_by_tags,
     fromstring,
     is_comment,
-    iter_comments,
     outer_html,
     remove_keep_tail,
 )
@@ -39,13 +36,6 @@ REMOVE_NODES_RE = (
     "|konafilter|KonaFilter|breadcrumbs|^fn$|wp-caption-text"
     "|legende|ajoutVideo|timestamp|js_replies"
 )
-
-CAPTION_RE = "^caption$"
-GOOGLE_RE = " google "
-ENTRIES_RE = "^[^entry-]more.*$"
-FACEBOOK_RE = "[^-]facebook"
-FACEBOOK_BROADCASTING_RE = "facebook-broadcasting"
-TWITTER_RE = "[^-]twitter"
 
 _DIV_TO_P_TAGS = ["a", "blockquote", "dl", "div", "img", "ol", "p", "pre", "table", "ul"]
 
@@ -212,112 +202,6 @@ def _collect_clean_targets(doc: Element) -> _CleanTargets:
                 if class_v is not None and rx.search(class_v):
                     t.extra[k][1].append(node)
     return t
-
-
-def _clean_bad_and_pattern_tags(doc: Element) -> None:
-    """clean_bad_tags + the six remove_nodes_regex passes
-    (cleaners.py:60-67, 121-145) with ONE tree walk instead of 15.
-
-    Matches are pre-collected per (pattern, attr) bucket in document
-    order, then removals run in the reference's pass order. A node
-    already detached by an earlier pass is re-removed inside its
-    detached subtree — a no-op for the final tree, identical output
-    (verified byte-exact on the golden corpus)."""
-    # buckets: naughty×(id,class,name), then per extra pattern ×(id,class)
-    n_extra = len(_PATTERN_RXS)
-    naughty = ([], [], [])
-    extra = [([], []) for _ in range(n_extra)]
-    stack = [doc]
-    while stack:
-        node = stack.pop()
-        children = node._children
-        if children:
-            stack.extend(children[::-1])
-        if node.tag.__class__ is not str:
-            continue
-        attrib = node.attrib
-        if not attrib:
-            continue
-        id_v = attrib.get("id")
-        class_v = attrib.get("class")
-        name_v = attrib.get("name")
-        if id_v is not None and _NAUGHTY_RX.search(id_v):
-            naughty[0].append(node)
-        if class_v is not None and _NAUGHTY_RX.search(class_v):
-            naughty[1].append(node)
-        if name_v is not None and _NAUGHTY_RX.search(name_v):
-            naughty[2].append(node)
-        for k, rx in enumerate(_PATTERN_RXS):
-            if id_v is not None and rx.search(id_v):
-                extra[k][0].append(node)
-            if class_v is not None and rx.search(class_v):
-                extra[k][1].append(node)
-    for bucket in naughty:
-        for node in bucket:
-            if not _has_article_descendant(node):
-                remove_keep_tail(node)
-    for k in range(n_extra):
-        for bucket in extra[k]:
-            for node in bucket:
-                remove_keep_tail(node)
-
-
-def clean_body_classes(doc):
-    elements = find_by_tag(doc, tag="body")
-    if elements:
-        elements[0].attrib.pop("class", None)
-    return doc
-
-
-def clean_article_tags(doc):
-    for article in find_by_tag(doc, tag="article"):
-        for attr in ("id", "name", "class"):
-            article.attrib.pop(attr, None)
-    return doc
-
-
-def clean_em_tags(doc):
-    for node in find_by_tag(doc, tag="em"):
-        if not find_by_tag(node, tag="img"):
-            drop_tag(node)
-    return doc
-
-
-def remove_drop_caps(doc):
-    for item in css_select(doc, "span[class~=dropcap], span[class~=drop_cap]"):
-        drop_tag(item)
-    return doc
-
-
-def remove_scripts_styles(doc):
-    for item in find_by_tag(doc, tag="script"):
-        remove_keep_tail(item)
-    for item in find_by_tag(doc, tag="style"):
-        remove_keep_tail(item)
-    for item in iter_comments(doc):
-        remove_keep_tail(item)
-    return doc
-
-
-def clean_bad_tags(doc):
-    for attr in ("id", "class", "name"):
-        for node in find_attr_regex(doc, attr, REMOVE_NODES_RE):
-            if not _has_article_descendant(node):
-                remove_keep_tail(node)
-    return doc
-
-
-def remove_nodes_regex(doc, pattern):
-    for selector in ("id", "class"):
-        for node in find_attr_regex(doc, selector, pattern):
-            remove_keep_tail(node)
-    return doc
-
-
-def clean_para_spans(doc):
-    for item in css_select(doc, "p span"):
-        drop_tag(item)
-    return doc
 
 
 def _get_text(node: Element) -> str:

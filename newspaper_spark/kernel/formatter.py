@@ -19,15 +19,10 @@ from ..dom import (
     remove_keep_tail,
     strip_tags,
 )
+from .scorer import get_text
 from .text import inner_trim
 
 _LITERAL_NL = r"\n"  # two characters: backslash + n
-
-
-def get_text(node: Element) -> str:
-    parts: list = []
-    node._gather_text(parts)
-    return inner_trim(" ".join(parts).strip())
 
 
 def get_formatted_text(top_node: Element) -> str:

@@ -20,7 +20,6 @@ from ..dom import (
     css_select,
     find_by_tag,
     find_by_tags,
-    node_to_html,
 )
 from .scorer import get_text
 from .urlutils import STRICT_DATE_REGEX
@@ -230,13 +229,7 @@ def _match_meta(metas, selector: str):
     from ..dom.select import _parse_selector
 
     groups = _parse_selector(selector)
-    out = []
-    for node in metas:
-        for chain in groups:
-            if chain[-1].matches(node):
-                out.append(node)
-                break
-    return out
+    return [node for node in metas if any(s.matches(node) for s in groups)]
 
 
 def get_meta_content(doc: Element, metaname: str, index: "MetaIndex | None" = None) -> str:

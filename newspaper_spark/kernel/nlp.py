@@ -197,19 +197,22 @@ def score_sentences(sentences, title_tokens, kws, language="en") -> Counter:
     return ranks
 
 
+def top_sentences(title, text, kws, max_sents=5, language="en") -> list:
+    """The summary's sentence selection given precomputed keywords:
+    the ``max_sents`` best-scored (idx, sentence) pairs in text order
+    (nlp.py:40-54)."""
+    ranks = score_sentences(
+        split_sentences(text), split_words(title), kws, language
+    ).most_common(max_sents)
+    return sorted((rank[0] for rank in ranks), key=lambda summary: summary[0])
+
+
 def summarize(title="", text="", max_sents=5, language="en") -> str:
     """nlp.py:40-54 + article.py:386-388 ('\n'-joined)."""
     if not text or not title or max_sents <= 0:
         return ""
-    summaries = []
-    sentences = split_sentences(text)
     kws = keywords(text, language)
-    title_words = split_words(title)
-    ranks = score_sentences(sentences, title_words, kws, language).most_common(max_sents)
-    for rank in ranks:
-        summaries.append(rank[0])
-    summaries.sort(key=lambda summary: summary[0])
-    return "\n".join([summary[1] for summary in summaries])
+    return "\n".join(s for _idx, s in top_sentences(title, text, kws, max_sents, language))
 
 
 def keyword_union(title: str, text: str, language: str = "en", max_keywords: int = 35) -> list:

@@ -24,10 +24,6 @@ def get_text(node: Element) -> str:
     return inner_trim(" ".join(parts).strip())
 
 
-def _stats(text: str, language: str):
-    return stopword_stats(text, language)
-
-
 def is_highlink_density(e: Element) -> bool:
     """(link_words / words) * num_links >= 1.0 (extractors.py:973-998).
 
@@ -95,15 +91,10 @@ def nodes_to_check(doc: Element, tags=None) -> list:
     return out
 
 
-def is_boostable(node: Element, language: str) -> bool:
-    """≤3 preceding <p> siblings, any with >5 stopwords
-    (extractors.py:845-870)."""
-    return _is_boostable_cached(
-        node, lambda n: _stats(get_text(n), language)
-    )
-
-
 def _is_boostable_cached(node: Element, node_stats) -> bool:
+    """≤3 preceding <p> siblings, any with >5 stopwords
+    (extractors.py:845-870); node_stats is the caller's memoized
+    stopword_stats lookup."""
     steps_away = 0
     for current_node in node.itersiblings(preceding=True):
         if current_node.tag == "p":
@@ -133,7 +124,7 @@ def calculate_best_node(doc: Element, language: str = "en"):
         key = id(node)
         hit = stats_cache.get(key)
         if hit is None:
-            hit = _stats(get_text(node), language)
+            hit = stopword_stats(get_text(node), language)
             stats_cache[key] = hit
         return hit
 
@@ -207,7 +198,7 @@ def get_siblings_score(top_node: Element, language: str) -> float:
     paragraphs_score = 0
     for node in find_by_tag(top_node, tag="p"):
         text_node = get_text(node)
-        word_stats = _stats(text_node, language)
+        word_stats = stopword_stats(text_node, language)
         if word_stats.stop_word_count > 2 and not is_highlink_density(node):
             paragraphs_number += 1
             paragraphs_score += word_stats.stop_word_count
@@ -227,7 +218,7 @@ def get_siblings_content(current_sibling: Element, baseline: float, language: st
     for first_paragraph in find_by_tag(current_sibling, tag="p"):
         text = get_text(first_paragraph)
         if len(text) > 0:
-            paragraph_score = _stats(text, language).stop_word_count
+            paragraph_score = stopword_stats(text, language).stop_word_count
             score = float(baseline * 0.30)
             if score < paragraph_score and not is_highlink_density(first_paragraph):
                 ps.append(Element("p", text=text))

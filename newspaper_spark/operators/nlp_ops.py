@@ -7,6 +7,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+SUMMARY_SENTENCES = 5
+SUMMARY_CHARS = 5000  # cap on the summary column, mirrored by the oracle SQL
+
 
 def _keywords_batch(texts, langs):
     from ..kernel.nlp import keywords
@@ -27,8 +30,9 @@ def _summary_batch(titles, texts, langs):
     for title, text, lang in zip(titles, texts, langs):
         try:
             out.append(
-                summarize(title=title or "", text=text or "", max_sents=5,
-                          language=lang or "en")[:5000]
+                summarize(title=title or "", text=text or "",
+                          max_sents=SUMMARY_SENTENCES,
+                          language=lang or "en")[:SUMMARY_CHARS]
             )
         except Exception:
             out.append("")
@@ -55,12 +59,7 @@ def _nlp_batch(titles, texts, langs):
     raises, ``summarize()`` would raise at its own internal
     ``keywords()`` call, so both columns take their original fallbacks
     (``[]`` / ``""``)."""
-    from ..kernel.nlp import (
-        keywords,
-        score_sentences,
-        split_sentences,
-        split_words,
-    )
+    from ..kernel.nlp import keywords, top_sentences
 
     kw_out, sum_out = [], []
     for title, text, lang in zip(titles, texts, langs):
@@ -80,15 +79,8 @@ def _nlp_batch(titles, texts, langs):
                 if kws is None:
                     raise ValueError("keywords failed")
                 # summarize(title, text, 5, lang) with kws shared
-                sentences = split_sentences(text)
-                ranks = score_sentences(
-                    sentences, split_words(title), kws, lang
-                ).most_common(5)
-                summaries = [rank[0] for rank in ranks]
-                summaries.sort(key=lambda summary: summary[0])
-                sum_out.append(
-                    "\n".join(summary[1] for summary in summaries)[:5000]
-                )
+                top = top_sentences(title, text, kws, SUMMARY_SENTENCES, lang)
+                sum_out.append("\n".join(s for _idx, s in top)[:SUMMARY_CHARS])
         except Exception:
             sum_out.append("")
     return pd.DataFrame({"keywords": kw_out, "summary": sum_out})
@@ -119,10 +111,10 @@ def _sentence_features_batch(titles, texts, langs):
     most_common(5) selection the summary actually uses."""
     from ..kernel.nlp import (
         keywords,
-        score_sentences,
         sentence_features,
         split_sentences,
         split_words,
+        top_sentences,
     )
 
     out = []
@@ -133,13 +125,10 @@ def _sentence_features_batch(titles, texts, langs):
             lang = lang or "en"
             sentences = split_sentences(text)
             kws = keywords(text, lang)
-            title_words = split_words(title)
-            feats = sentence_features(sentences, title_words, kws, lang)
+            feats = sentence_features(sentences, split_words(title), kws, lang)
             top5 = {
                 idx
-                for (idx, _s), _score in score_sentences(
-                    sentences, title_words, kws, lang
-                ).most_common(5)
+                for idx, _s in top_sentences(title, text, kws, SUMMARY_SENTENCES, lang)
             }
             out.append(
                 [

@@ -1,8 +1,10 @@
 """Source.build() as a DataFrame lineage (SURVEY.md §3.2):
 
-sources(url, html) → explode(category_urls) → explode(article url/title
-pairs) → prepare/filter(valid_url) → left-anti seen-URL table →
-dropDuplicates(url) → per-source cap (window ≤ 5000).
+category/feed pages (source_url, category_url|feed_url, html) →
+explode(article url/title pairs) → prepare/filter(valid_url) →
+left-anti seen-URL table → dropDuplicates(url) → per-source cap
+(window ≤ 5000). Finding the category and feed URLs of a source page
+is ``kernel.source.get_category_urls`` / ``get_feed_urls``.
 
 Every relational step is Catalyst-native; only the DOM link extraction
 runs in Arrow-batched pandas UDFs. The seen-URL anti-join replaces the
@@ -17,30 +19,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MAX_ARTICLES_PER_SOURCE = 5000
-
-
-def _category_urls_batch(source_urls, htmls):
-    from ..kernel.source import get_category_urls
-
-    out = []
-    for su, html in zip(source_urls, htmls):
-        try:
-            out.append(get_category_urls(su or "", html or ""))
-        except Exception:
-            out.append([])
-    return pd.Series(out, dtype="object")
-
-
-def _feed_urls_batch(source_urls, htmls):
-    from ..kernel.source import get_feed_urls
-
-    out = []
-    for su, html in zip(source_urls, htmls):
-        try:
-            out.append(get_feed_urls(su or "", html or ""))
-        except Exception:
-            out.append([])
-    return pd.Series(out, dtype="object")
 
 
 def _article_pairs_batch(category_urls, htmls):
@@ -67,8 +45,6 @@ def _feed_article_urls_batch(source_urls, htmls):
     return pd.Series(out, dtype="object")
 
 
-category_urls_udf = F.pandas_udf(_category_urls_batch, T.ArrayType(T.StringType()))
-feed_urls_udf = F.pandas_udf(_feed_urls_batch, T.ArrayType(T.StringType()))
 article_pairs_udf = F.pandas_udf(
     _article_pairs_batch,
     T.ArrayType(
@@ -80,23 +56,6 @@ article_pairs_udf = F.pandas_udf(
 feed_article_urls_udf = F.pandas_udf(
     _feed_article_urls_batch, T.ArrayType(T.StringType())
 )
-
-
-def extract_categories(sources: DataFrame) -> DataFrame:
-    """sources(source_url, html) → (source_url, category_url)."""
-    return sources.select(
-        "source_url",
-        F.explode(
-            category_urls_udf(F.col("source_url"), F.col("html"))
-        ).alias("category_url"),
-    )
-
-
-def extract_feeds(sources: DataFrame) -> DataFrame:
-    return sources.select(
-        "source_url",
-        F.explode(feed_urls_udf(F.col("source_url"), F.col("html"))).alias("feed_url"),
-    )
 
 
 def categories_to_articles(category_pages: DataFrame) -> DataFrame:

@@ -15,7 +15,8 @@ partial failure. Design:
   are recomputed and their directories overwritten (dynamic partition
   overwrite ⇒ idempotent, Iceberg-snapshot-equivalent in plain parquet).
 * Lineage: per-bucket row count, error count and an order-insensitive
-  content checksum (sum of per-row xxhash64), written into the manifest.
+  content checksum (XOR-fold of per-row xxhash64(conv_id, turn_idx,
+  text)), written into the manifest and recomputed by the audit.
 
 On a real cluster the same structure maps onto Iceberg: bucket(conv_id)
 partition transform + snapshot-isolated overwrite of failed partitions.
@@ -158,33 +159,37 @@ class ExtractionJob:
         if not paths:
             return {}
         out = self.spark.read.option("basePath", self.output_dir).parquet(*paths)
-        rows = (
-            out.groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(
-                    F.when(~F.col("status").eqNullSafe("ok"), 1).otherwise(0)
-                ).alias("errors"),
-                # XOR-fold: order-insensitive, overflow-free content hash
-                F.bit_xor(
-                    F.xxhash64(
-                        F.col("conv_id"),
-                        F.col("turn_idx"),
-                        F.coalesce(F.col("text"), F.lit("")),
-                    )
-                ).alias("checksum"),
-            )
-            .collect()
-        )
         return {
-            r["bucket"]: {
-                "status": "done",
-                "rows": r["rows"],
-                "errors": int(r["errors"] or 0),
-                "checksum": int(r["checksum"] or 0),
-            }
-            for r in rows
+            b: {"status": "done", "rows": rows, "errors": errors, "checksum": checksum}
+            for b, (rows, errors, checksum) in _bucket_lineage(out).items()
         }
+
+
+def _bucket_lineage(out: DataFrame) -> dict:
+    """bucket → (rows, errors, checksum) of written output rows; the
+    manifest records it and the audit recomputes it."""
+    rows = (
+        out.groupBy("bucket")
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum(
+                F.when(~F.col("status").eqNullSafe("ok"), 1).otherwise(0)
+            ).alias("errors"),
+            # XOR-fold: order-insensitive, overflow-free content hash
+            F.bit_xor(
+                F.xxhash64(
+                    F.col("conv_id"),
+                    F.col("turn_idx"),
+                    F.coalesce(F.col("text"), F.lit("")),
+                )
+            ).alias("checksum"),
+        )
+        .collect()
+    )
+    return {
+        r["bucket"]: (r["rows"], int(r["errors"] or 0), int(r["checksum"] or 0))
+        for r in rows
+    }
 
 
 def read_output(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -198,28 +203,7 @@ def audit_output(spark: SparkSession, output_dir: str) -> dict:
     10^12-turn run would execute before promoting a snapshot."""
     with open(os.path.join(output_dir, MANIFEST_NAME)) as f:
         manifest = json.load(f)
-    out = spark.read.parquet(output_dir)
-    actual = (
-        out.groupBy("bucket")
-        .agg(
-            F.count("*").alias("rows"),
-            F.sum(
-                F.when(~F.col("status").eqNullSafe("ok"), 1).otherwise(0)
-            ).alias("errors"),
-            F.bit_xor(
-                F.xxhash64(
-                    F.col("conv_id"),
-                    F.col("turn_idx"),
-                    F.coalesce(F.col("text"), F.lit("")),
-                )
-            ).alias("checksum"),
-        )
-        .collect()
-    )
-    actual_by_bucket = {
-        r["bucket"]: (r["rows"], int(r["errors"] or 0), int(r["checksum"] or 0))
-        for r in actual
-    }
+    actual_by_bucket = _bucket_lineage(spark.read.parquet(output_dir))
     mismatches = []
     for b, info in manifest["buckets"].items():
         if info.get("status") != "done":

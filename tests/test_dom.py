@@ -1,8 +1,9 @@
 """DOM layer unit tests: parsing, text/tail semantics, ops, selectors."""
+import pytest
+
 from newspaper_spark.dom import (
     css_select,
     drop_tag,
-    find_attr_regex,
     find_by_tag,
     fromstring,
     iter_comments,
@@ -131,25 +132,20 @@ def test_find_by_tag_attr_contains():
     assert len(found) == 1
 
 
-def test_find_attr_regex():
-    doc = parse_document(
-        '<body><div id="sidebar">x</div><div id="main">y</div></body>'
-    )
-    found = find_attr_regex(doc, "id", "^side")
-    assert len(found) == 1 and found[0].attrib["id"] == "sidebar"
-
-
 def test_css_select():
     doc = parse_document(
         '<body><p><span class="dropcap big">x</span></p>'
         '<meta name="description" content="d">'
         '<a rel="tag">t</a><a href="/tags/x">u</a></body>'
     )
-    assert len(css_select(doc, "p span")) == 1
     assert len(css_select(doc, "span[class~=dropcap]")) == 1
     assert len(css_select(doc, "meta[name=description]")) == 1
     assert len(css_select(doc, "a[rel=tag]")) == 1
     assert len(css_select(doc, "a[href*='/tags/']")) == 1
+    # combinators are unsupported: an error, not a silently wrong match
+    for selector in ("p span", "p > span", "meta, p span"):
+        with pytest.raises(ValueError):
+            css_select(doc, selector)
 
 
 def test_serialize_roundtrip():

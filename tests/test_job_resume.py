@@ -1,6 +1,7 @@
 """Checkpoint/resume + lineage tests for the bucketed extraction job."""
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -112,6 +113,33 @@ def test_audit_matches_manifest(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     t = _small_transcripts(spark, 24)
     job = ExtractionJob(spark, out_dir, n_buckets=4, buckets_per_commit=4)
-    job.run(t)
+    manifest = job.run(t)
     report = audit_output(spark, out_dir)
     assert report["ok"], report["mismatches"]
+
+    # negative path: tamper with one bucket's written rows; the audit
+    # must name that bucket both when the row count is unchanged and
+    # when a row is missing
+    bucket = max(manifest["buckets"], key=lambda b: manifest["buckets"][b]["rows"])
+    bucket_dir = os.path.join(out_dir, f"bucket={bucket}")
+    pristine = str(tmp_path / "pristine")
+    shutil.copytree(bucket_dir, pristine)
+    first = spark.read.parquet(bucket_dir).orderBy("conv_id", "turn_idx").first()
+    is_first = (F.col("conv_id") == first["conv_id"]) & (
+        F.col("turn_idx") == first["turn_idx"]
+    )
+    changed_text = F.concat(F.coalesce(F.col("text"), F.lit("")), F.lit("!"))
+    tampered = {
+        "text_changed": lambda df: df.withColumn(
+            "text", F.when(is_first, changed_text).otherwise(F.col("text"))
+        ),
+        "row_dropped": lambda df: df.filter(~is_first),
+    }
+    for name, tamper in tampered.items():
+        staged = str(tmp_path / name)
+        tamper(spark.read.parquet(pristine)).write.parquet(staged)
+        shutil.rmtree(bucket_dir)
+        shutil.copytree(staged, bucket_dir)
+        report = audit_output(spark, out_dir)
+        assert not report["ok"], name
+        assert [m["bucket"] for m in report["mismatches"]] == [int(bucket)], name

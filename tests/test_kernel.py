@@ -426,3 +426,219 @@ def test_meta_refresh_extraction():
     assert target and "example" in target
     ap = (DATA / "html" / "ap_meta_refresh.html").read_text(encoding="utf-8")
     assert extract_meta_refresh(ap) is None  # no url= part → stay put
+
+
+# ---------------------------------------------------------------------------
+# cleaner passes on inline pages: one page per _collect_clean_targets
+# bucket (plus div/span/section → p), expected values pinned from the
+# kernel's output so that dropping any one pass changes a page's result
+# ---------------------------------------------------------------------------
+
+_S1 = "It was also noted that there is more to be said about this and that for all of us."
+_S2 = "It is the case that we are not sure what it was they had said to the rest of them."
+_S3 = "It was the one that is not there for us to see at all."
+_D1 = "It was also noted that there is more to be said about this and that."
+_D2 = "It is the case that we are not sure what it was they had said to them."
+_BOX = "It was the box that is to be taken out of this for all of us."
+
+
+def _page(body, body_attrs=""):
+    return (
+        "<html><head><title>A cleaner test page</title></head>"
+        f"<body{body_attrs}>{body}</body></html>"
+    )
+
+
+def _story(extra):
+    return _page(f'<div class="story"><p>{_S1}</p><p>{_S2}</p>{extra}</div>')
+
+
+_PATTERN_VALUES = {
+    "caption": "caption",
+    "google": "x google y",
+    "entries": "smore-link",
+    "facebook": "xfacebook",
+    "facebook_broadcasting": "facebook-broadcasting",
+    "twitter": "xtwitter",
+}
+
+# (id, html, expected text paragraphs, expected article_html or None)
+_CLEANER_CASES = [
+    (
+        "body_class",
+        _page(f"<p>{_S1}</p><p>{_S2}</p>", ' class="story-page"'),
+        [_S1, _S2],
+        f"<div><p>{_S1}</p><p>{_S2}</p></div>",
+    ),
+    (
+        "article_attrs",
+        _story(
+            "<p>one more paragraph that is here for the top node to have it.</p>"
+            '<article class="zn-body__read-all">'
+            "<p>Read all of the story that is in it</p></article>"
+        ),
+        [_S1, _S2, "one more paragraph that is here for the top node to have it."],
+        None,
+    ),
+    (
+        "em_no_img",
+        _page(
+            "<div>It was also noted that <em>there is more</em> to be said"
+            f" about this and that.<p>{_S2}</p></div>"
+        ),
+        ["It was also noted that there is more to be said about this and that.", _S2],
+        None,
+    ),
+    (
+        # the kept em is a node of its own when div_to_para splices the div
+        "em_with_img",
+        _page(
+            '<div>It was also noted that <em>there is <img src="a.png"> more</em>'
+            f" to be said about this and that.<p>{_S2}</p></div>"
+        ),
+        ["there is more", "It was also noted thatto be said about this and that.", _S2],
+        None,
+    ),
+    (
+        "dropcap",
+        _page(f'<div><span class="dropcap">I</span>t was the one that is not there for us to see at all.<p>{_S2}</p></div>'),
+        [_S3, _S2],
+        None,
+    ),
+    (
+        "drop_cap",
+        _page(f'<div><span class="big drop_cap">I</span>t was the one that is not there for us to see at all.<p>{_S2}</p></div>'),
+        [_S3, _S2],
+        None,
+    ),
+    (
+        "p_span",
+        _story("<p>It was the one <span>that is not there</span> for us to see at all in this.</p>"),
+        [_S1, _S2, "It was the one that is not there for us to see at all in this."],
+        None,
+    ),
+    (
+        "script",
+        _story("<div><script>var itWasTheScript = 1;</script>the text after the script tag is here</div>"),
+        [_S1, _S2, "the text after the script tag is here"],
+        None,
+    ),
+    (
+        "style",
+        _story("<div><style>p { it: was; }</style>the text after the style tag is here</div>"),
+        [_S1, _S2, "the text after the style tag is here"],
+        None,
+    ),
+    (
+        "comment",
+        _story("<div>the text before<!-- it was a comment -->the text after the comment</div>"),
+        [_S1, _S2, "the text before the text after the comment"],
+        None,
+    ),
+    (
+        "naughty_id",
+        _story('<p id="sidebar-footer">It was all in the footer that is not to be in the text.</p>'),
+        [_S1, _S2],
+        None,
+    ),
+    (
+        "naughty_class",
+        _story('<p class="comment-box">It was all in the comments that is not to be in the text.</p>'),
+        [_S1, _S2],
+        None,
+    ),
+    (
+        "naughty_name",
+        _story('<p name="sponsor">It was all in the sponsor box that is not to be in the text.</p>'),
+        [_S1, _S2],
+        None,
+    ),
+    (
+        "naughty_keeps_article",
+        _page(f'<div class="footer-wrap"><article><p>{_S1}</p><p>{_S2}</p></article></div>'),
+        [_S1, _S2],
+        None,
+    ),
+] + [
+    (f"{name}_{attr}", _story(f'<p {attr}="{value}">{_BOX}</p>'), [_S1, _S2], None)
+    for name, value in _PATTERN_VALUES.items()
+    for attr in ("id", "class")
+] + [
+    (
+        "div_to_p",
+        _page(f"<div>{_D1}</div><div>{_D2}</div>"),
+        [_D1, _D2],
+        None,
+    ),
+    (
+        "div_to_p_mixed",
+        _page(
+            '<div>It was also noted that there is <a href="/x">a link</a> in the text'
+            f" of this.<p>{_S2}</p>and it is the tail text of the div that is here for us</div>"
+        ),
+        [
+            "It was also noted that there is a link in the text of this.",
+            _S2,
+            "and it is the tail text of the div that is here for us",
+        ],
+        None,
+    ),
+    (
+        "span_to_p",
+        _page(f"<span>{_D1}</span><span>{_D2}</span>"),
+        [_D1, _D2],
+        None,
+    ),
+    (
+        "section_to_p",
+        _page(f"<section>{_D1}</section><section>{_D2}</section>"),
+        [_D1, _D2],
+        None,
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "html,paragraphs,article_html",
+    [c[1:] for c in _CLEANER_CASES],
+    ids=[c[0] for c in _CLEANER_CASES],
+)
+def test_cleaner_pass_pages(html, paragraphs, article_html):
+    from newspaper_spark.kernel.article import extract_article
+    from newspaper_spark.kernel.fulltext import fulltext
+
+    rec = extract_article(html, keep_article_html=article_html is not None)
+    assert rec["title"] == "A cleaner test page"
+    assert rec["text"] == "\n\n".join(paragraphs)
+    if article_html is not None:
+        assert rec["article_html"] == article_html
+    assert fulltext(html) == rec["text"]
+
+
+def test_trace_fixture_names_the_removing_pass(tmp_path, capsys):
+    """scripts/trace_fixture.py runs only production steps: it must name
+    the cleaner bucket that removes a snippet and follow a kept snippet
+    to the final text."""
+    import importlib.util
+
+    script = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "trace_fixture.py"
+    spec = importlib.util.spec_from_file_location("trace_fixture", script)
+    trace_fixture = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(trace_fixture)
+
+    page = tmp_path / "page.html"
+    page.write_text(
+        _story('<div class="footer"><p>It was the footer snippet that is in here.</p></div>'),
+        encoding="utf-8",
+    )
+    trace_fixture.main([str(page), "footer snippet"])
+    out = capsys.readouterr().out
+    assert 'bucket naughty class (removed unless it holds an article): <div class="footer">' in out
+    assert "after clean_document: False" in out
+    assert "in final text: False" in out
+
+    trace_fixture.main([str(page), "more to be said"])
+    out = capsys.readouterr().out
+    assert "bucket naughty" not in out
+    assert "after clean_document: True" in out
+    assert "in final text: True" in out
